@@ -12,6 +12,15 @@ Design notes (100 TB posture):
   across drivers/executors (the reference pipeline has no absolute clock;
   see SURVEY.md §1.1 Timestamp row, master.ino:700-712).
 - Arrow enabled for every Python exchange (pandas UDFs, toPandas).
+- Driver heap (``spark.driver.memory``) is ``$SPARK_GRAFT_DRIVER_MEM``
+  verbatim when set; otherwise ``driver_memory`` fits it to the
+  machine: the smallest of 48g, half of physical memory
+  and half of a cgroup-v2 ``memory.max``, never below Spark's own 1g.
+  Half, because the JVM's resident size runs ~1.7 GB above ``-Xmx`` and
+  the Python process, its workers and the OS share the rest. The JVM
+  collects only as its heap fills, so a heap larger than the machine
+  grows until the kernel OOM-kills it, and a long-lived session (the
+  test suite runs in one) dies partway through.
 """
 
 from __future__ import annotations
@@ -19,6 +28,38 @@ from __future__ import annotations
 import os
 
 from pyspark.sql import SparkSession
+
+_DRIVER_MEM_CAP_MB = 48 * 1024
+_DRIVER_MEM_FLOOR_MB = 1024  # Spark's own spark.driver.memory default
+_CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+
+
+def _physical_memory_bytes() -> int:
+    return os.sysconf("SC_PHYS_PAGES") * os.sysconf("SC_PAGE_SIZE")
+
+
+def _cgroup_memory_max_bytes() -> int | None:
+    """The cgroup-v2 memory limit, or None where there is none ("max")
+    or no cgroup-v2 memory controller is mounted."""
+    try:
+        with open(_CGROUP_MEMORY_MAX) as f:
+            raw = f.read().strip()
+    except OSError:
+        return None
+    return int(raw) if raw.isdigit() else None
+
+
+def driver_memory() -> str:
+    """``$SPARK_GRAFT_DRIVER_MEM`` unchanged when set; else the heap fitted
+    to the machine: min(48g, physical/2, cgroup memory.max/2), floored at
+    1g, as a Spark size string."""
+    explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
+    if explicit:
+        return explicit
+    limits = [_physical_memory_bytes(), _cgroup_memory_max_bytes()]
+    half_mb = min(b for b in limits if b is not None) // 2 // 2**20
+    mb = max(_DRIVER_MEM_FLOOR_MB, min(_DRIVER_MEM_CAP_MB, half_mb))
+    return f"{mb // 1024}g" if mb % 1024 == 0 else f"{mb}m"
 
 
 def get_spark(
@@ -32,6 +73,11 @@ def get_spark(
     ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (falling back to
     ``local[*]``) so tests and bench share one code path; on a real
     cluster the caller passes the cluster master / lets spark-submit set it.
+
+    ``spark.driver.memory`` is ``$SPARK_GRAFT_DRIVER_MEM`` when set (passed
+    through unchanged), else fitted by ``driver_memory()``: 48g on hosts with
+    96 GB or more, half of physical memory (or of a cgroup-v2 limit) below
+    that, never under 1g. It only takes effect when this call starts the JVM.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")
@@ -68,7 +114,7 @@ def get_spark(
         # --- broadcast threshold: dims up to 64 MB broadcast -------------
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.ui.enabled", "false")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config("spark.driver.memory", driver_memory())
     )
     if extra_conf:
         for k, v in extra_conf.items():
