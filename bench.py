@@ -329,6 +329,7 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from hive_hw_spark.queries import all_queries
     from hive_hw_spark.session import get_spark
+    from hive_hw_spark.session_cache import release_session_caches
 
     spark = get_spark(app_name="hive_hw_bench")
 
@@ -393,19 +394,6 @@ def main() -> None:
     timings: dict[str, float] = {}
     per_query_load: dict[str, float | None] = {}
 
-    def release_all_cached_state() -> None:
-        """Same storage-hygiene rule scripts/drive.py applies every 150
-        queries: a 277-query single-session sweep accumulates persisted
-        frames + localCheckpoint blocks until GC pressure inflates
-        unrelated tail queries (r9: q220 read 1.7 s mid-sweep vs 0.7 s
-        in r8's shorter sweep). Each query still warms its OWN frames
-        across its min-of-3 reps; only cross-query accumulation goes."""
-        from hive_hw_spark.queries import llm_ops, plan_cache_clear
-
-        llm_ops.release_all_cached()
-        plan_cache_clear()
-        spark.catalog.clearCache()
-
     # r14 (verdict item 7): per-query build-vs-reuse attribution for the
     # shared _managed_persist helper families (_exploded_embeddings,
     # _bm25_scores, ...). Whichever family member runs first pays the
@@ -425,7 +413,13 @@ def main() -> None:
             continue
         n_run += 1
         if n_run % 150 == 0:
-            release_all_cached_state()
+            # Same storage-hygiene rule scripts/drive.py applies every
+            # 150 queries: a 277-query single-session sweep accumulates
+            # persisted frames + localCheckpoint blocks until GC pressure
+            # inflates unrelated tail queries (r9: q220 read 1.7 s
+            # mid-sweep vs 0.7 s in r8's shorter sweep). Each query still
+            # warms its OWN frames across its min-of-3 reps.
+            release_session_caches(spark)
         _llm_ops.PERSIST_EVENTS.clear()
         reps: list[float] = []
         for _ in range(3):
@@ -458,9 +452,10 @@ def main() -> None:
             ld = load1()
         timings[name] = round(best, 3)
         per_query_load[name] = ld
-        # Slots this query MATERIALIZED during its reps vs slots it only
-        # read warm (built earlier by another family member). A slot
-        # built on rep 1 and reused on reps 2-3 counts as built here.
+        # Persist entries (slot@plan digest) this query MATERIALIZED
+        # during its reps vs entries it only read warm (built earlier by
+        # another family member). An entry built on rep 1 and reused on
+        # reps 2-3 counts as built here.
         _built = sorted({k for k, b in _llm_ops.PERSIST_EVENTS if b})
         _warm = sorted(
             {k for k, b in _llm_ops.PERSIST_EVENTS if not b}

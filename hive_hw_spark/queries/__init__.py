@@ -19,6 +19,8 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_hw_spark.session_cache import plan_cache  # noqa: F401 — query modules import it from here
+
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
 
@@ -43,58 +45,6 @@ def register(name: str, oracle: str | None = None, doc: str = ""):
         return fn
 
     return deco
-
-
-_PLAN_CACHE: dict = {}
-
-
-def plan_cache_clear() -> None:
-    """Drop every memoized analyzed frame (long-sweep memory hygiene:
-    the memo pins DataFrames — and any localCheckpoint RDD blocks they
-    reference — for session lifetime; a full-registry sweep releases
-    them periodically so one session's storage stays bounded)."""
-    _PLAN_CACHE.clear()
-
-
-def plan_cache(fn: QueryFn) -> QueryFn:
-    """Session-scope prepared-plan reuse for PURE query fns (no DML or
-    catalog side effects): re-invoking with the same (session, sf_dir)
-    returns the SAME analyzed DataFrame instead of rebuilding and
-    re-analyzing a wide expression tree. This is the DataFrame analog of
-    a prepared-statement cache — Catalyst analysis of e.g. q97's
-    64-vote aggregate or q118's LSH pair plan costs 1.5-3 s of DRIVER
-    time per build (invisible to executors and to .explain), which at
-    cluster scale is pure latency before the first task launches.
-    Never apply to fns with side effects (q06 saveAsTable, q110 MERGE):
-    the memo would skip their re-execution."""
-    import functools
-
-    @functools.wraps(fn)
-    def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-        # evict entries pinned to dead sessions: a stale entry holds
-        # py4j-backed DataFrames (and any localCheckpoint RDD state)
-        # for process lifetime otherwise
-        for k, (sess, _) in list(_PLAN_CACHE.items()):
-            if sess is not spark and _session_stopped(sess):
-                del _PLAN_CACHE[k]
-        key = (fn.__name__, sf_dir)
-        sess, df = _PLAN_CACHE.get(key, (None, None))
-        if df is not None and sess is spark:
-            return df
-        df = fn(spark, sf_dir)
-        _PLAN_CACHE[key] = (spark, df)
-        return df
-
-    return wrapped
-
-
-def _session_stopped(sess: SparkSession) -> bool:
-    """True when the session's JVM context is gone (sc.stop() or process
-    teardown). Used only for cache eviction, so errors read as 'stopped'."""
-    try:
-        return sess.sparkContext._jsc is None
-    except Exception:
-        return True
 
 
 _MODULES = (

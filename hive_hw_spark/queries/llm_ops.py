@@ -39,6 +39,12 @@ from hive_hw_spark.queries._util import (
     sql_dec_ratio,
     sql_dratio_round,
 )
+# PERSIST_EVENTS: perfbench and bench.py read the event log from here;
+# query modules import _managed_persist from here
+from hive_hw_spark.session_cache import PERSIST_EVENTS  # noqa: F401
+from hive_hw_spark.session_cache import managed_persist as _managed_persist
+from hive_hw_spark.session_cache import memo
+from hive_hw_spark.session_cache import plan_key as _plan_key
 
 # Fixed stopword list for Q93/Q98 (the engine vocabulary's function words).
 STOPWORDS = ("a", "the", "and", "of", "to", "in", "is", "on", "for", "with")
@@ -49,101 +55,12 @@ def _toks(col: str = "text") -> F.Column:
     return F.split(F.col(col), " ")
 
 
-_PERSIST_CACHE: dict[str, tuple[str | None, DataFrame]] = {}
-
-# r14 (verdict item 7): append-only (slot, built) event log so the bench
-# detail can attribute a shared helper's one-time materialization cost to
-# the FIRST-builder query (q384/q405/q427-q431/q444 share
-# _exploded_embeddings etc. — whichever runs first pays the build, the
-# rest read warm, and per-query numbers in the family are otherwise not
-# independent). Readers (bench.py) clear it per query; nothing in the
-# query path depends on it.
-PERSIST_EVENTS: list[tuple[str, bool]] = []
-
 # (docs_plan_key, pairs_plan_key) -> (session, labels frame).
 # Connected-components results are checkpoint-backed, so the CacheManager
 # can never match them by plan; this session-scope memo is the only way a
 # re-invocation (bench min-of-2, q118-then-q122) reuses the converged
 # labels instead of re-running the whole propagation loop.
-_COMPONENT_CACHE: dict = {}
-
-
-def _plan_key(df: DataFrame) -> str | None:
-    """Collision-proof plan identity for session-scope memos: sha256 of
-    the CANONICALIZED analyzed plan string (expression ids normalized,
-    so the key is stable across rebuilds of the same logical query —
-    the same normalization ``semanticHash`` hashes, kept as the full
-    string because a 32-bit hash colliding between two different plans
-    in one session would silently serve wrong cached results) PLUS the
-    plan's input files. The files matter: the canonicalized string
-    RENDERS relations without their location (``Relation [none#0L,...]
-    parquet``), so the same query shape over sf0.001 and sf0.01 would
-    otherwise collide — exactly the drive.py sequence (entry smoke at
-    sf0.001, sweep at sf0.01), caught when the sweep's q118 was served
-    the smoke run's cluster labels. ``semanticHash`` rides along for the
-    identity the string AND the file list both miss: checkpoint-backed
-    plans (LogicalRDD) have no input files and render pathless, but
-    their RDD id reaches the hash — reuse across two different
-    checkpoints must never fire. A false cache hit now needs all three
-    components to agree. ``None`` (never cache-hit) when the plan
-    identity is unavailable."""
-    import hashlib
-
-    try:
-        s = df._jdf.queryExecution().analyzed().canonicalized().toString()
-        files = "\n".join(sorted(df.inputFiles()))
-        sh = df.semanticHash()
-        return hashlib.sha256(f"{s}\x00{files}\x00{sh}".encode()).hexdigest()
-    except Exception:
-        return None
-
-
-def _managed_persist(key: str, df: DataFrame) -> DataFrame:
-    """Persist ``df``, bounding executor storage (memory AND disk-store
-    blocks) to one live copy per operator across a long session sweeping
-    many queries. A semantically identical re-request (same query, same
-    inputs — e.g. bench's min-of-2 runs) returns the ALREADY-persisted
-    frame so the warm cache survives; only a genuinely different plan
-    (other sf_dir, other params) releases the old copy. Unpersisting an
-    older frame is always safe: a still-held result built on it just
-    recomputes."""
-    from pyspark import StorageLevel
-
-    new_pk = _plan_key(df)
-    old_pk, old = _PERSIST_CACHE.get(key, (None, None))
-    if old is not None:
-        try:
-            if new_pk is not None and new_pk == old_pk:
-                PERSIST_EVENTS.append((key, False))
-                return old
-            old.unpersist(False)
-        except Exception:
-            pass
-    _PERSIST_CACHE[key] = (new_pk, df.persist(StorageLevel.MEMORY_AND_DISK))
-    PERSIST_EVENTS.append((key, True))
-    return df
-
-
-def release_all_cached() -> None:
-    """Unpersist and forget every frame this module manages — the one
-    place the cache's value shape and its release logic live together,
-    so long-sweep callers (scripts/drive.py's every-150-queries purge)
-    never depend on ``_PERSIST_CACHE``'s internals. Queries rebuild
-    their shared frames cold on next use: correctness-neutral,
-    storage-bounded."""
-    for key in list(_PERSIST_CACHE):
-        _, frame = _PERSIST_CACHE.pop(key)
-        try:
-            if frame is not None:
-                frame.unpersist()
-        except Exception:  # noqa: BLE001 — dead sessions/frames skip fine
-            pass
-    _COMPONENT_CACHE.clear()
-    # Driver-side numpy memos too (plan-keyed, so clearing is
-    # correctness-neutral): without this the every-150-queries purge
-    # bounded executor storage but let driver-Python memory accumulate.
-    _CENTROID_MEMO.clear()
-    _PQ_MEMO.clear()
+_COMPONENT_CACHE: dict = memo()
 
 
 # --------------------------------------------------------------------------
@@ -1188,7 +1105,7 @@ def _unit_vectors(e: DataFrame) -> DataFrame:
 # Spark jobs on every re-invocation of the (deterministic) build.
 # Same-plan → same rows, so the matrix is safe to reuse; different
 # input/params → different key.
-_CENTROID_MEMO: dict[str, tuple[np.ndarray, np.ndarray]] = {}
+_CENTROID_MEMO: dict[str, tuple[np.ndarray, np.ndarray]] = memo()
 
 
 def _collect_centroids(cents_df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
@@ -1329,7 +1246,7 @@ def q92c(spark: SparkSession, sf_dir: str) -> DataFrame:
 # PQ codebook memo, same rationale as _CENTROID_MEMO: training runs a few
 # small collect() ACTIONS whose inputs are deterministic, so re-invoking the
 # build should reuse the learned codebooks instead of re-running the jobs.
-_PQ_MEMO: dict[tuple, np.ndarray] = {}
+_PQ_MEMO: dict[tuple, np.ndarray] = memo()
 
 
 def pq_index(

@@ -21,10 +21,12 @@ commit removes; the logical plan below is identical, which is the
 point: callers migrate by swapping ``merge_upsert`` for ``MERGE INTO``
 when the format arrives.
 
-Scale notes: the join shuffles on the merge key exactly like any equi
-join (broadcast the source side when it is small — the common CDC
-case); everything else is map-side. The full-table rewrite is the real
-cost of MERGE-on-parquet at 100 TB — partition the target and restrict
+Scale notes: the join shuffles both sides on the merge key. Spark
+cannot broadcast either side of a ``full_outer`` join (the broadcast
+side's unmatched rows would have to be tracked across every partition),
+so a small source does not spare the target its shuffle; everything
+else is map-side. The full-table rewrite is the real cost of
+MERGE-on-parquet at 100 TB — partition the target and restrict
 the rewrite to touched partitions (``partition_filter``).
 """
 
@@ -40,7 +42,6 @@ def merge_upsert(
     source: DataFrame,
     key_cols: list[str],
     delete_condition: Column | None = None,
-    broadcast_source: bool = True,
 ) -> DataFrame:
     """MERGE ``source`` into catalog table ``target_table`` on ``key_cols``.
 
@@ -72,8 +73,6 @@ def merge_upsert(
     # would NOT work — the struct itself stays non-null)
     tgt_m = tgt.withColumn("__t", F.lit(1))
     src_m = source.withColumn("__s", F.lit(1))
-    if broadcast_source:
-        src_m = F.broadcast(src_m)
     joined = tgt_m.alias("t").join(src_m.alias("s"), key_cols, "full_outer")
     has_t = F.col("__t").isNotNull()
     has_s = F.col("__s").isNotNull()

@@ -21,6 +21,7 @@ sys.path.insert(0, "/root/repo")
 import __spark_entry__ as e  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
+from hive_hw_spark.session_cache import release_session_caches  # noqa: E402
 from tests.oracle_harness import compare, duckdb_conn  # noqa: E402
 
 spark = (
@@ -32,18 +33,6 @@ spark = (
     .getOrCreate()
 )
 spark.sparkContext.setLogLevel("ERROR")
-
-
-def _release_all_cached_state() -> None:
-    """Drop every persisted frame, checkpoint block and memo so the
-    sweep's storage footprint stays bounded. Queries rebuild their
-    shared frames on next use — correctness-neutral, memory-bounded."""
-    from hive_hw_spark.queries import llm_ops, plan_cache_clear
-
-    llm_ops.release_all_cached()
-    plan_cache_clear()
-    spark.catalog.clearCache()
-
 
 df = e.entry(spark)
 rows = df.collect()
@@ -74,7 +63,7 @@ print(f"sweep order: {_order}")
 
 for i, name in enumerate(names):
     if i > 0 and i % 150 == 0:
-        _release_all_cached_state()
+        release_session_caches(spark)
     try:
         sdf = qs[name](spark, sf)
         if name in osql:

@@ -30,6 +30,7 @@ import pandas as pd  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
 
 import __spark_entry__ as entry  # noqa: E402
+from hive_hw_spark.session_cache import release_session_caches  # noqa: E402
 from tests.oracle_harness import duckdb_conn  # noqa: E402
 
 # Benign, root-caused, monitored (see ROADMAP round-10 addendum and
@@ -54,11 +55,7 @@ nonzero, over, errors = {}, {}, {}
 names = sorted(n for n in qs if n in osql)
 for i, name in enumerate(names):
     if i > 0 and i % 150 == 0:
-        from hive_hw_spark.queries import llm_ops, plan_cache_clear
-
-        llm_ops.release_all_cached()
-        plan_cache_clear()
-        spark.catalog.clearCache()
+        release_session_caches(spark)
     try:
         got = qs[name](spark, sf).toPandas()
         want = con.execute(osql[name]).df()

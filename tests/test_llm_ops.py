@@ -592,12 +592,14 @@ def test_q102_threshold_pairs_multiblock_equals_singleblock(spark, sf_dir):
     assert multi == single and len(single) > 0
 
 
-def test_release_all_cached_empties_module_caches():
-    """scripts/drive.py's every-150-queries purge calls this one helper;
-    it must unpersist every managed frame and clear the component memo
-    regardless of what shape the cache values take (r8 advice: the purge
-    previously unpacked _PERSIST_CACHE tuples itself and would silently
-    skip unpersists after any refactor of the value shape)."""
+def test_release_session_caches_empties_every_cache():
+    """scripts/drive.py's every-150-queries purge (and bench.py's, and
+    the raw-divergence audit's) calls this one helper; it must unpersist
+    every managed frame, forget every plan memo, clear every registered
+    driver-side memo and Spark's cache, whatever the entries hold."""
+    from types import SimpleNamespace
+
+    from hive_hw_spark import session_cache as sc
     from hive_hw_spark.queries import llm_ops
 
     class FakeFrame:
@@ -607,23 +609,159 @@ def test_release_all_cached_empties_module_caches():
         def unpersist(self, *a):
             self.released = True
 
+    cleared = []
+    fake_spark = SimpleNamespace(
+        catalog=SimpleNamespace(clearCache=lambda: cleared.append(True))
+    )
+    memos = (llm_ops._COMPONENT_CACHE, llm_ops._CENTROID_MEMO, llm_ops._PQ_MEMO)
+    saved = [dict(sc._FRAMES), dict(sc._PLANS)] + [dict(m) for m in memos]
     f1, f2 = FakeFrame(), FakeFrame()
-    saved_p = dict(llm_ops._PERSIST_CACHE)
-    saved_c = dict(llm_ops._COMPONENT_CACHE)
     try:
-        llm_ops._PERSIST_CACHE.clear()
-        llm_ops._COMPONENT_CACHE.clear()
-        llm_ops._PERSIST_CACHE["a"] = ("pk1", f1)
-        llm_ops._PERSIST_CACHE["b"] = (None, f2)
-        llm_ops._COMPONENT_CACHE["k"] = ("sess", "frame")
-        llm_ops.release_all_cached()
-        assert llm_ops._PERSIST_CACHE == {}
-        assert llm_ops._COMPONENT_CACHE == {}
-        assert f1.released and f2.released
+        sc._FRAMES.clear()
+        sc._PLANS.clear()
+        sc._FRAMES[("a", "pk1")] = sc._Entry(("a", "pk1"), "a@pk1", f1)
+        sc._FRAMES[("b", None)] = sc._Entry(("b", None), "b@none", f2)
+        sc._PLANS[("q1", "d")] = ("sess", "frame", frozenset())
+        for m in memos:
+            m["k"] = "v"
+        sc.release_session_caches(fake_spark)
+        assert sc._FRAMES == {} and sc._PLANS == {}
+        assert all(m == {} for m in memos)
+        assert f1.released and f2.released and cleared == [True]
     finally:
-        llm_ops._PERSIST_CACHE.clear()
-        llm_ops._PERSIST_CACHE.update(saved_p)
-        llm_ops._COMPONENT_CACHE.update(saved_c)
+        sc._FRAMES.clear()
+        sc._FRAMES.update(saved[0])
+        sc._PLANS.clear()
+        sc._PLANS.update(saved[1])
+        for m, old in zip(memos, saved[2:]):
+            m.clear()
+            m.update(old)
+
+
+def _copy_documents(sf_dir, dst) -> str:
+    """A second dataset directory holding a copy of ``documents``."""
+    import shutil
+
+    shutil.copy(os.path.join(sf_dir, "documents.parquet"), dst)
+    return str(dst)
+
+
+def _doc_lengths(spark, sf_dir):
+    from hive_hw_spark.catalog import load_table
+
+    return load_table(spark, sf_dir, "documents").select(
+        "doc_id", F.length("text").alias("n")
+    )
+
+
+def test_plan_key_stable_across_persist(spark, sf_dir):
+    """A frame's plan key must not change once the frame is persisted:
+    a persisted plan's optimized form swaps its scan for the cached
+    relation, so a key built from ``df.inputFiles()`` loses its files
+    and the first re-request of every persisted plan built it again."""
+    from hive_hw_spark.queries.llm_ops import _plan_key
+
+    df = _doc_lengths(spark, sf_dir)
+    before = _plan_key(df)
+    df.persist()
+    try:
+        df.count()
+        assert before is not None
+        assert _plan_key(df) == before
+        assert _plan_key(_doc_lengths(spark, sf_dir)) == before
+    finally:
+        df.unpersist()
+
+
+def test_plan_key_tells_dataset_dirs_apart(spark, sf_dir, tmp_path):
+    """The same query shape over two directories gets two keys, also
+    when both frames are persisted (where the files used to vanish from
+    the key and the two collided)."""
+    from hive_hw_spark.queries.llm_ops import _plan_key
+
+    other = _copy_documents(sf_dir, tmp_path)
+    frames = [_doc_lengths(spark, d) for d in (sf_dir, other)]
+    for df in frames:
+        df.persist()
+        df.count()
+    try:
+        keys = [_plan_key(_doc_lengths(spark, d)) for d in (sf_dir, other)]
+        assert None not in keys and keys[0] != keys[1]
+    finally:
+        for df in frames:
+            df.unpersist()
+
+
+def test_plan_cached_query_reads_its_cache_on_every_revisit(
+    spark, sf_dir, tmp_path
+):
+    """q427 is plan-cached over a persisted BM25 frame. Alternated
+    between two datasets, each revisit must still plan an
+    InMemoryTableScan: a dataset's build must not release the frame
+    the other dataset's memoized plan reads."""
+    q427 = all_queries()["q427"].fn
+    other = _copy_documents(sf_dir, tmp_path)
+    for _ in range(3):
+        for d in (sf_dir, other):
+            df = q427(spark, d)
+            df.write.format("noop").mode("overwrite").save()
+            # a fresh plan sees the cache as it is now
+            plan = df.select("*")._jdf.queryExecution().executedPlan()
+            assert "InMemoryTableScan" in plan.toString(), d
+
+
+def test_session_cache_evicts_lru_entry_and_reruns_its_plan(spark, monkeypatch):
+    """Over the byte budget, the least recently used entry is
+    unpersisted, and the plan memo that read it runs its fn again
+    instead of returning a plan over the released frame."""
+    from hive_hw_spark import session_cache as sc
+
+    calls = []
+
+    @sc.plan_cache
+    def _lru_probe(spark, tag):
+        calls.append(tag)
+        base = spark.range(10).withColumn("tag", F.lit(tag))
+        return sc.managed_persist("test_lru", base).select("id")
+
+    try:
+        _lru_probe(spark, "a").write.format("noop").mode("overwrite").save()
+        (key_a,) = [k for k in sc._FRAMES if k[0] == "test_lru"]
+        # the real readers: a materialized entry has a size, the budget
+        # comes from the block manager's storage pool
+        assert sc._entry_sizes(spark)[key_a] > 0
+        assert sc._budget(spark) > 0
+
+        monkeypatch.setattr(sc, "_budget", lambda spark: 100)
+        monkeypatch.setattr(
+            sc,
+            "_entry_sizes",
+            lambda spark: {k: 80 for k in sc._FRAMES if k[0] == "test_lru"},
+        )
+        _lru_probe(spark, "b")
+        assert len([k for k in sc._FRAMES if k[0] == "test_lru"]) == 2
+        frame_a = sc._FRAMES[key_a].frame
+        # a hit makes "a" the most recently used, so "b" goes first
+        _lru_probe(spark, "a")
+        assert calls == ["a", "b"]
+        (key_b,) = [k for k in sc._FRAMES if k[0] == "test_lru" and k != key_a]
+        frame_b = sc._FRAMES[key_b].frame
+        _lru_probe(spark, "c")
+        assert key_b not in sc._FRAMES and key_a in sc._FRAMES
+        assert not frame_b.is_cached and frame_a.is_cached
+        _lru_probe(spark, "b")
+        assert calls == ["a", "b", "c", "b"]
+        # rebuilding "b" went over the budget again: "a" was now the
+        # least recently used, "c" stays live and its memo still hits
+        assert key_a not in sc._FRAMES
+        _lru_probe(spark, "c")
+        assert calls == ["a", "b", "c", "b"]
+    finally:
+        for k, e in list(sc._FRAMES.items()):
+            if k[0] == "test_lru":
+                sc._release(e)
+        for k in [k for k in sc._PLANS if k[0] == "_lru_probe"]:
+            del sc._PLANS[k]
 
 
 def test_ann_frontier_monotonicity(spark, sf_dir):

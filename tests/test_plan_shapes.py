@@ -544,25 +544,24 @@ def test_q237_multi_format_federated_union(spark, sf_dir, tmp_path):
 def test_ann_frontiers_share_one_panel_pairs_persist(spark, sf_dir):
     """q384/q443/q444 must all search over ONE persisted ground-truth
     pair matrix (the |Q| x N matmul is the expensive part of every
-    frontier audit): after running all three, the managed-persist cache
-    holds exactly one panel_pairs entry, and each executed plan reads
-    it as an InMemoryTableScan rather than recomputing the matmul."""
-    from hive_hw_spark.queries import all_queries, plan_cache_clear
-    from hive_hw_spark.queries import llm_ops
+    frontier audit): after running all three, the session cache holds
+    exactly one panel_pairs entry (one slot, one plan), and each
+    executed plan reads it as an InMemoryTableScan rather than
+    recomputing the matmul."""
+    from hive_hw_spark.queries import all_queries
+    from hive_hw_spark import session_cache
 
     # full reset: release managed persists AND the analyzed-plan memo —
-    # with only the former, a same-session earlier invocation (the
-    # oracle-parity sweep) leaves plan_cache returning memoized frames,
-    # so the fns never re-register their persists and the cache-key
-    # assertion below sees an empty cache (suite-order flake found by
-    # the r9 full run)
-    llm_ops.release_all_cached()
-    plan_cache_clear()
+    # otherwise a same-session earlier invocation (the oracle-parity
+    # sweep) leaves plan_cache returning memoized frames, so the fns
+    # never re-register their persists and the entry assertion below
+    # sees an empty cache (suite-order flake found by the r9 full run)
+    session_cache.release_session_caches(spark)
     reg = all_queries()
     for name in ("q384", "q443", "q444"):
         df = reg[name].fn(spark, sf_dir)
         df.write.format("noop").mode("overwrite").save()
         plan = df._jdf.queryExecution().executedPlan().toString()
         assert "InMemoryTableScan" in plan, name
-    keys = [k for k in llm_ops._PERSIST_CACHE if "panel_pairs" in k]
-    assert keys == ["panel_pairs"], keys
+    slots = [slot for slot, _ in session_cache._FRAMES if "panel_pairs" in slot]
+    assert slots == ["panel_pairs"], slots
