@@ -18,6 +18,8 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from hive_hw_spark.tables import replace_table
+
 TABLES = (
     "region",
     "nation",
@@ -130,16 +132,5 @@ def save_as_catalog_table(
     ``enableHiveSupport()`` writes to a real metastore.
     """
     catalog_name = catalog_name or f"cat_{name}"
-    # A fresh session's in-memory catalog doesn't know about a managed-table
-    # location left in the warehouse by a previous session; drop both the
-    # catalog entry and any stale location so saveAsTable never hits
-    # LOCATION_ALREADY_EXISTS.
-    spark.sql(f"DROP TABLE IF EXISTS {catalog_name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if warehouse.startswith("file:"):
-        import shutil
-
-        stale = os.path.join(warehouse.removeprefix("file:"), catalog_name)
-        shutil.rmtree(stale, ignore_errors=True)
-    load_table(spark, sf_dir, name).write.mode("overwrite").saveAsTable(catalog_name)
+    replace_table(spark, catalog_name, load_table(spark, sf_dir, name).write)
     return catalog_name

@@ -59,7 +59,7 @@ from hive_hw_spark.queries import register
     "accumulating catalog entries.",
 )
 def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from hive_hw_spark.tables import merge_upsert
+    from hive_hw_spark.tables import merge_upsert, replace_table, warehouse_path
 
     c = load_table(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", "c_acctbal"
@@ -79,14 +79,12 @@ def q110(spark: SparkSession, sf_dir: str) -> DataFrame:
     # would otherwise accumulate one orphan dir per process forever
     from hive_hw_spark.catalog import reap_stale_session_dirs
 
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if warehouse.startswith("file:"):
+    warehouse = warehouse_path(spark)
+    if warehouse is not None:
         reap_stale_session_dirs(
-            warehouse.removeprefix("file:"),
-            "q110_target_",
-            spark.sparkContext.applicationId,
+            warehouse, "q110_target_", spark.sparkContext.applicationId
         )
-    c.write.mode("overwrite").saveAsTable(tname)
+    replace_table(spark, tname, c.write)
     upd = c.filter(F.col("c_custkey") % 10 == 0).withColumn(
         "c_acctbal",
         F.when(F.col("c_custkey") % 100 == 50, F.lit(-1000.0)).otherwise(

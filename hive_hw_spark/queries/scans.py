@@ -89,16 +89,12 @@ def q146(spark: SparkSession, sf_dir: str) -> DataFrame:
     import os
 
     from hive_hw_spark.catalog import reap_stale_session_dirs
+    from hive_hw_spark.tables import warehouse_path
 
     ev = load_table(spark, sf_dir, "events").withColumn(
         "event_date", F.to_date("ts")
     )
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    root = (
-        warehouse.removeprefix("file:")
-        if warehouse.startswith("file:")
-        else "spark-warehouse"
-    )
+    root = warehouse_path(spark) or "spark-warehouse"
     app_id = spark.sparkContext.applicationId
     reap_stale_session_dirs(root, "q146_events_", app_id)
     path = os.path.join(

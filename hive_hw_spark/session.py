@@ -13,10 +13,8 @@ Design notes (100 TB posture):
   see SURVEY.md §1.1 Timestamp row, master.ino:700-712).
 - Arrow enabled for every Python exchange (pandas UDFs, toPandas).
 - Driver heap (``spark.driver.memory``) is ``$SPARK_GRAFT_DRIVER_MEM``
-  verbatim when set; otherwise ``driver_memory`` fits it to the
-  machine: the smallest of 48g, half of physical memory
-  and half of a cgroup-v2 ``memory.max``, never below Spark's own 1g.
-  Half, because the JVM's resident size runs ~1.7 GB above ``-Xmx`` and
+  verbatim when set; otherwise ``driver_memory`` fits it to half the
+  machine's memory or cgroup limit, capped at 48g. Half, because the JVM's resident size runs ~1.7 GB above ``-Xmx`` and
   the Python process, its workers and the OS share the rest. The JVM
   collects only as its heap fills, so a heap larger than the machine
   grows until the kernel OOM-kills it, and a long-lived session (the
@@ -32,6 +30,7 @@ from pyspark.sql import SparkSession
 _DRIVER_MEM_CAP_MB = 48 * 1024
 _DRIVER_MEM_FLOOR_MB = 1024  # Spark's own spark.driver.memory default
 _CGROUP_MEMORY_MAX = "/sys/fs/cgroup/memory.max"
+_CGROUP_V1_MEMORY_LIMIT = "/sys/fs/cgroup/memory/memory.limit_in_bytes"
 
 
 def _physical_memory_bytes() -> int:
@@ -39,19 +38,22 @@ def _physical_memory_bytes() -> int:
 
 
 def _cgroup_memory_max_bytes() -> int | None:
-    """The cgroup-v2 memory limit, or None where there is none ("max")
-    or no cgroup-v2 memory controller is mounted."""
-    try:
-        with open(_CGROUP_MEMORY_MAX) as f:
-            raw = f.read().strip()
-    except OSError:
-        return None
-    return int(raw) if raw.isdigit() else None
+    """cgroup-v2 ``memory.max``, else cgroup-v1 ``memory.limit_in_bytes``;
+    None for v2's "max" or no controller. v1's no-limit is a number near
+    2**63, which physical memory wins over in ``driver_memory``."""
+    for path in (_CGROUP_MEMORY_MAX, _CGROUP_V1_MEMORY_LIMIT):
+        try:
+            with open(path) as f:
+                raw = f.read().strip()
+        except OSError:
+            continue
+        return int(raw) if raw.isdigit() else None
+    return None
 
 
 def driver_memory() -> str:
     """``$SPARK_GRAFT_DRIVER_MEM`` unchanged when set; else the heap fitted
-    to the machine: min(48g, physical/2, cgroup memory.max/2), floored at
+    to the machine: min(48g, physical/2, cgroup limit/2), floored at
     1g, as a Spark size string."""
     explicit = os.environ.get("SPARK_GRAFT_DRIVER_MEM")
     if explicit:
@@ -74,10 +76,8 @@ def get_spark(
     ``local[*]``) so tests and bench share one code path; on a real
     cluster the caller passes the cluster master / lets spark-submit set it.
 
-    ``spark.driver.memory`` is ``$SPARK_GRAFT_DRIVER_MEM`` when set (passed
-    through unchanged), else fitted by ``driver_memory()``: 48g on hosts with
-    96 GB or more, half of physical memory (or of a cgroup-v2 limit) below
-    that, never under 1g. It only takes effect when this call starts the JVM.
+    ``spark.driver.memory`` is ``driver_memory()``. It only takes effect
+    when this call starts the JVM.
     """
     if master is None:
         cpus = os.environ.get("SPARK_GRAFT_CPUS")

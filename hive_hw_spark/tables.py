@@ -10,30 +10,87 @@ lakehouse MERGE compiles to anyway:
       WHEN MATCHED            THEN UPDATE SET *
       WHEN NOT MATCHED        THEN INSERT *
 
-== full-outer join on the key + per-row resolution + table rewrite.
-The rewrite goes through a staging table then a catalog
-DROP + RENAME, so a reader never observes a half-written location —
-but the swap is NOT crash-atomic: a failure between the DROP and the
-RENAME leaves the merged data only under the staging name
-(``<target>__merge_staging`` — recover by renaming it back). That
-crash window is exactly what a lakehouse format's metadata-only atomic
-commit removes; the logical plan below is identical, which is the
-point: callers migrate by swapping ``merge_upsert`` for ``MERGE INTO``
-when the format arrives.
+== full-outer join on the key + per-row resolution + table rewrite
+through :func:`replace_table`, whose crash window a lakehouse format's
+metadata-only atomic commit removes. The logical plan is identical,
+which is the point: callers migrate by swapping ``merge_upsert`` for
+``MERGE INTO`` when the format arrives.
 
 Scale notes: the join shuffles both sides on the merge key. Spark
 cannot broadcast either side of a ``full_outer`` join (the broadcast
 side's unmatched rows would have to be tracked across every partition),
 so a small source does not spare the target its shuffle; everything
 else is map-side. The full-table rewrite is the real cost of
-MERGE-on-parquet at 100 TB — partition the target and restrict
-the rewrite to touched partitions (``partition_filter``).
+MERGE-on-parquet at 100 TB.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, SparkSession
+import os
+import shutil
+
+from pyspark.sql import Column, DataFrame, DataFrameWriter, SparkSession
 from pyspark.sql import functions as F
+
+
+def warehouse_path(spark) -> str | None:
+    """The session warehouse as a local directory; None off the local disk."""
+    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
+    return warehouse.removeprefix("file:") if warehouse.startswith("file:") else None
+
+
+def replace_table(spark, name: str, writer: DataFrameWriter) -> DataFrame:
+    """Replace catalog table ``name`` with what ``writer`` saves; return it.
+
+    The one staged-replace protocol, shared with :func:`replace_dir`:
+    write the new state in full under a staging name, remove the old
+    state, rename the stage into its place. A reader never sees a
+    half-written table, and the writer may read the table it replaces
+    (which an in-place overwrite refuses). Each name's catalog entry is
+    dropped, and its lower-cased warehouse location (where Spark keeps a
+    managed table) reaped, before it is written: a location an earlier
+    session left fails the write with LOCATION_ALREADY_EXISTS. Crash
+    window: between removal and rename the new state exists only under
+    the staging name; :func:`replace_dir` renames a complete stage back
+    in on its next call, a table's ``<name>__staging`` is renamed back
+    by hand.
+    """
+    staging = f"{name}__staging"
+    _drop_table(spark, staging)
+    writer.saveAsTable(staging)
+    _drop_table(spark, name)
+    spark.sql(f"ALTER TABLE {staging} RENAME TO {name}")
+    return spark.table(name)
+
+
+def _drop_table(spark, name: str) -> None:
+    spark.sql(f"DROP TABLE IF EXISTS {name}")
+    root = warehouse_path(spark)
+    if root is not None:
+        shutil.rmtree(os.path.join(root, name.lower()), ignore_errors=True)
+
+
+def replace_dir(path: str, df: DataFrame) -> None:
+    """Replace parquet directory ``path`` with ``df`` by
+    :func:`replace_table`'s protocol. The old directory is renamed aside
+    before it is deleted, so ``path`` is never left partial."""
+    stage, old = _recover_dir(path), path.rstrip("/") + "__old"
+    df.write.mode("overwrite").parquet(stage)
+    shutil.rmtree(old, ignore_errors=True)
+    if os.path.isdir(path):
+        os.rename(path, old)
+    os.rename(stage, path)
+    shutil.rmtree(old, ignore_errors=True)
+
+
+def _recover_dir(path: str) -> str:
+    """Finish a swap a crash interrupted: with ``path`` missing, a complete
+    stage (``_SUCCESS`` is written last) is the newest state. Returns the
+    stage's path."""
+    stage = path.rstrip("/") + "__stage"
+    if not os.path.isdir(path) and os.path.exists(os.path.join(stage, "_SUCCESS")):
+        os.rename(stage, path)
+    return stage
 
 
 def merge_upsert(
@@ -87,24 +144,7 @@ def merge_upsert(
         ],
     ).select(*cols)
 
-    staging = f"{target_table}__merge_staging"
-    spark.sql(f"DROP TABLE IF EXISTS {staging}")
-    # a crash in a PREVIOUS merge can leave the staging *location* on
-    # disk with no catalog entry (fresh session) — drop it too, or the
-    # saveAsTable below dies with LOCATION_ALREADY_EXISTS
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if warehouse.startswith("file:"):
-        import os
-        import shutil
-
-        shutil.rmtree(
-            os.path.join(warehouse.removeprefix("file:"), staging.lower()),
-            ignore_errors=True,
-        )
-    out.write.mode("overwrite").saveAsTable(staging)
-    spark.sql(f"DROP TABLE IF EXISTS {target_table}")
-    spark.sql(f"ALTER TABLE {staging} RENAME TO {target_table}")
-    return spark.table(target_table)
+    return replace_table(spark, target_table, out.write)
 
 
 def _nonkey(cols: list[str], key_cols: list[str]) -> list[str]:
@@ -130,11 +170,10 @@ def compact_parquet_dir(
     count. Production notes: target ≈ total_bytes / 128 MB; lakehouse
     formats run this as OPTIMIZE/rewrite-data-files with a transactional
     swap — here the destination is a fresh directory and the caller owns
-    the swap, mirroring tables.merge_upsert's staging discipline."""
+    the swap."""
     df = spark.read.parquet(src_dir)
     df.repartition(target_files).write.mode("overwrite").parquet(dst_dir)
     import glob
-    import os
 
     return len(glob.glob(os.path.join(dst_dir, "part-*.parquet")))
 
@@ -165,7 +204,6 @@ def sort_parquet_dir(
         .parquet(dst_dir)
     )
     import glob
-    import os
 
     return len(glob.glob(os.path.join(dst_dir, "part-*.parquet")))
 
@@ -186,22 +224,9 @@ def write_bucketed_table(
     fact⋈fact join that otherwise shuffles terabytes every run pays
     its shuffle ONCE at write time (the Hive-bucketing / Iceberg
     bucket-transform analog; tests/test_tables.py proves the
-    exchange-free plan). Stale same-name tables and their warehouse
-    dirs are reaped first, mirroring save_as_catalog_table."""
-    import os
-    import shutil
-
-    spark.sql(f"DROP TABLE IF EXISTS {table_name}")
-    warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-    if warehouse.startswith("file:"):
-        stale = os.path.join(warehouse.removeprefix("file:"), table_name)
-        shutil.rmtree(stale, ignore_errors=True)
-    (
-        df.write.mode("overwrite")
-        .bucketBy(n_buckets, *bucket_cols)
-        .sortBy(*bucket_cols)
-        .saveAsTable(table_name)
-    )
+    exchange-free plan)."""
+    writer = df.write.bucketBy(n_buckets, *bucket_cols).sortBy(*bucket_cols)
+    replace_table(spark, table_name, writer)
     return table_name
 
 
@@ -221,8 +246,7 @@ def incremental_rollup_merge(
     commutative, rollup ⊕ agg(delta) ≡ agg(full data) — the invariant
     tests/test_tables.py asserts. At 100 TB this is the difference
     between rescanning the fact table per refresh and touching
-    |days-in-delta| rows; a lakehouse MERGE INTO gets the atomic swap,
-    as documented on merge_upsert."""
+    |days-in-delta| rows. ``rollup`` may read ``target_table`` itself."""
     delta = delta_events.groupBy("day").agg(
         F.count(F.lit(1)).alias("n"),
         F.sum(F.col("value").cast("decimal(30,10)")).alias("total"),
@@ -244,8 +268,7 @@ def incremental_rollup_merge(
             ).cast("decimal(30,10)").alias("total"),
         )
     )
-    merged.write.mode("overwrite").saveAsTable(target_table)
-    return spark.table(target_table)
+    return replace_table(spark, target_table, merged.write)
 
 
 def zorder_parquet_dir(
@@ -310,7 +333,6 @@ def zorder_parquet_dir(
         .parquet(dst_dir)
     )
     import glob
-    import os
 
     return len(glob.glob(os.path.join(dst_dir, "part-*.parquet")))
 
@@ -360,17 +382,13 @@ def scd2_apply_batch(
     collapsed event sequence, so (prior changes ∪ new events) re-runs
     the lag-collapse on just that slice; untouched users' rows are
     carried over with an anti join. At 100 TB the affected slice is
-    the micro-batch's key set, not the dimension. The rewrite lands in
-    a staging dir then swaps (the merge_upsert pattern) so readers
-    never see a half-written table; a lakehouse format would replace
-    the swap with an atomic MERGE commit."""
-    import os
-    import shutil
-
+    the micro-batch's key set, not the dimension. A swap an earlier
+    crash interrupted is finished before the dimension is read."""
     from pyspark.sql import Window
 
     cols = ["user_id", "event_id", "state", "ts_s"]
     batch_df = batch_df.select(*cols)
+    _recover_dir(dim_dir)
     if os.path.isdir(dim_dir):
         existing = spark.read.parquet(dim_dir)
         affected = batch_df.select("user_id").distinct()
@@ -408,8 +426,4 @@ def scd2_apply_batch(
         )
     )
     out = rebuilt if keep is None else keep.unionByName(rebuilt)
-    stage = dim_dir.rstrip("/") + "__stage"
-    out.write.mode("overwrite").parquet(stage)
-    if os.path.isdir(dim_dir):
-        shutil.rmtree(dim_dir)
-    os.rename(stage, dim_dir)
+    replace_dir(dim_dir, out)

@@ -1,5 +1,8 @@
 """Driver-style verification: vanilla session, entry smoke + full oracle sweep.
 
+    python scripts/drive.py              # every registry query
+    python scripts/drive.py q422 q434    # only the named queries
+
 The session stays semantically vanilla (no engine-behavior configs the
 query fns could lean on) but gets an explicit driver heap: the default
 1g JVM survives ~330 registry queries in one sweep and then OOMs on
@@ -16,7 +19,7 @@ which is a stricter check than a warm sweep, at ~2x wall cost.
 import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 import __spark_entry__ as e  # noqa: E402
 from pyspark.sql import SparkSession  # noqa: E402
@@ -52,7 +55,7 @@ ok, bad, noracle = [], [], []
 # shuffled, fixed seed 9) re-verifies the registry under a different
 # warm/cold pattern without changing any semantics.
 _order = os.environ.get("SPARK_GRAFT_SWEEP_ORDER", "sorted")
-names = sorted(qs)
+names = sys.argv[1:] or sorted(qs)
 if _order == "reverse":
     names.reverse()
 elif _order == "shuffled":
@@ -64,6 +67,9 @@ print(f"sweep order: {_order}")
 for i, name in enumerate(names):
     if i > 0 and i % 150 == 0:
         release_session_caches(spark)
+    if name not in qs:
+        bad.append((name, "not in registry"))
+        continue
     try:
         sdf = qs[name](spark, sf)
         if name in osql:

@@ -12,6 +12,8 @@ import os
 
 from pyspark.sql import functions as F
 
+from hive_hw_spark.tables import write_bucketed_table
+
 
 def test_bucketed_join_has_no_exchange(spark, sf_dir):
     li = spark.read.parquet(os.path.join(sf_dir, "lineitem.parquet"))
@@ -27,16 +29,7 @@ def test_bucketed_join_has_no_exchange(spark, sf_dir):
         ("b_lineitem", li, "l_orderkey"),
         ("b_orders", o, "o_orderkey"),
     ):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        warehouse = spark.conf.get("spark.sql.warehouse.dir", "")
-        if warehouse.startswith("file:"):
-            import shutil
-
-            shutil.rmtree(
-                os.path.join(warehouse.removeprefix("file:"), name),
-                ignore_errors=True,
-            )
-        df.write.bucketBy(8, key).sortBy(key).saveAsTable(name)
+        write_bucketed_table(spark, df, name, [key], 8)
 
     try:
         bl = spark.table("b_lineitem")

@@ -59,11 +59,29 @@ def test_explicit_env_passes_through_unchanged(host, monkeypatch):
 def test_cgroup_reader_treats_max_as_no_limit(tmp_path, monkeypatch):
     limit = tmp_path / "memory.max"
     monkeypatch.setattr(session, "_CGROUP_MEMORY_MAX", str(limit))
-    assert session._cgroup_memory_max_bytes() is None  # no v2 controller
+    monkeypatch.setattr(session, "_CGROUP_V1_MEMORY_LIMIT", str(tmp_path / "v1"))
+    assert session._cgroup_memory_max_bytes() is None  # no controller
     limit.write_text("max\n")
     assert session._cgroup_memory_max_bytes() is None
     limit.write_text(f"{4 * GIB}\n")
     assert session._cgroup_memory_max_bytes() == 4 * GIB
+
+
+def test_cgroup_v1_limit_read_when_v2_absent(tmp_path, monkeypatch):
+    """Without a cgroup-v2 ``memory.max`` the v1 ``memory.limit_in_bytes``
+    is the limit; v1's no-limit sentinel loses to physical memory."""
+    monkeypatch.delenv("SPARK_GRAFT_DRIVER_MEM", raising=False)
+    monkeypatch.setattr(session, "_CGROUP_MEMORY_MAX", str(tmp_path / "memory.max"))
+    v1 = tmp_path / "memory.limit_in_bytes"
+    monkeypatch.setattr(session, "_CGROUP_V1_MEMORY_LIMIT", str(v1))
+    monkeypatch.setattr(session, "_physical_memory_bytes", lambda: 16 * GIB)
+    v1.write_text(f"{6 * GIB}\n")
+    assert session._cgroup_memory_max_bytes() == 6 * GIB
+    assert session.driver_memory() == "3g"
+    v1.write_text("9223372036854771712\n")
+    assert session.driver_memory() == "8g"
+    (tmp_path / "memory.max").write_text(f"{4 * GIB}\n")  # v2 wins
+    assert session.driver_memory() == "2g"
 
 
 def test_suite_session_heap_fits_in_physical_memory(spark):

@@ -611,12 +611,7 @@ def test_q190_streaming_materialized_view_maintenance(spark, tmp_path):
             if sess.catalog.tableExists(tbl)
             else empty_rollup
         )
-        # merge writes saveAsTable(overwrite) — read the CURRENT rollup
-        # eagerly first so the overwrite doesn't read-after-truncate
-        frozen = sess.createDataFrame(
-            current.collect(), "day string, n bigint, total decimal(30,10)"
-        )
-        incremental_rollup_merge(sess, frozen, batch_df, tbl)
+        incremental_rollup_merge(sess, current, batch_df, tbl)
 
     stream = (
         spark.readStream.schema(schema)

@@ -240,12 +240,118 @@ def test_incremental_rollup_merge_equals_full_recompute(spark):
         assert g == f
         # second identical merge must NOT be idempotent-by-accident:
         # adding the delta twice doubles its contribution (ADD semantics)
-        got2 = incremental_rollup_merge(spark, got, delta, tbl + "_2")
+        got2 = incremental_rollup_merge(spark, got, delta, tbl)
         d2 = {r.day: r.n for r in got2.collect()}
         assert d2["2024-01-03"] == 2
     finally:
         spark.sql(f"DROP TABLE IF EXISTS {tbl}")
-        spark.sql(f"DROP TABLE IF EXISTS {tbl}_2")
+
+
+def test_incremental_rollup_merge_into_its_own_table(spark):
+    """The rollup a merge reads may be the table it writes: each round
+    reads the stored rollup and merges the delta back into it, with no
+    second table and no driver-side copy, and leaves no staging table."""
+    from hive_hw_spark.tables import incremental_rollup_merge
+
+    tbl = f"q171_self_{uuid.uuid4().hex[:8]}"
+    spark.createDataFrame(
+        [], "day string, n bigint, total decimal(30,10)"
+    ).write.saveAsTable(tbl)
+    delta = spark.createDataFrame(
+        [("2024-01-01", 1.5), ("2024-01-02", 4.0)], "day string, value double"
+    )
+    try:
+        for _ in range(3):
+            incremental_rollup_merge(spark, spark.table(tbl), delta, tbl)
+        got = sorted((r.day, r.n, str(r.total)) for r in spark.table(tbl).collect())
+        assert got == [
+            ("2024-01-01", 3, "4.5000000000"),
+            ("2024-01-02", 3, "12.0000000000"),
+        ]
+        assert not spark.catalog.tableExists(f"{tbl}__staging")
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {tbl}")
+
+
+@pytest.mark.parametrize("writer", ["write_bucketed_table", "save_as_catalog_table"])
+def test_mixed_case_name_over_stale_location(spark, sf_dir, writer):
+    """A managed table lives under its lower-cased name. A location an
+    earlier session left there, unknown to this session's catalog, is
+    reaped for a mixed-case name too, instead of failing the write with
+    LOCATION_ALREADY_EXISTS."""
+    import os
+
+    from hive_hw_spark.catalog import load_table, save_as_catalog_table
+    from hive_hw_spark.tables import warehouse_path, write_bucketed_table
+
+    name = f"Stale_Mixed_{uuid.uuid4().hex[:8]}"
+    stale = os.path.join(warehouse_path(spark), name.lower())
+    os.makedirs(stale)
+    with open(os.path.join(stale, "part-00000.parquet"), "w") as f:
+        f.write("left by an earlier session")
+    try:
+        if writer == "write_bucketed_table":
+            df = load_table(spark, sf_dir, "region")
+            write_bucketed_table(spark, df, name, ["r_regionkey"], 2)
+        else:
+            save_as_catalog_table(spark, sf_dir, "region", name)
+        assert spark.table(name).count() == 5
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
+
+
+def test_scd2_finishes_a_swap_a_crash_interrupted(spark, tmp_path):
+    """A crash after the dimension was moved aside and before the
+    complete stage was renamed in leaves the history only in
+    ``__stage``; the next batch renames it in before reading, so every
+    user's rows survive, and the leftover ``__old`` copy is reaped."""
+    import os
+    import shutil
+
+    from hive_hw_spark.tables import scd2_apply_batch
+
+    schema = "user_id long, event_id long, state string, ts_s long"
+    dim = str(tmp_path / "dim")
+    scd2_apply_batch(
+        spark,
+        dim,
+        spark.createDataFrame(
+            [(1, 1, "active", 100), (1, 2, "idle", 200), (2, 3, "active", 150)],
+            schema,
+        ),
+    )
+    shutil.copytree(dim, dim + "__stage")
+    os.rename(dim, dim + "__old")
+    scd2_apply_batch(spark, dim, spark.createDataFrame([(2, 5, "error", 400)], schema))
+    got = sorted(
+        (r.user_id, r.version, r.state, r.valid_from_s, r.valid_to_s)
+        for r in spark.read.parquet(dim).collect()
+    )
+    assert got == [
+        (1, 1, "active", 100, 200),
+        (1, 2, "idle", 200, None),
+        (2, 1, "active", 150, 400),
+        (2, 2, "error", 400, None),
+    ], got
+    assert not os.path.exists(dim + "__stage")
+    assert not os.path.exists(dim + "__old")
+
+
+def test_only_tables_py_spells_the_swap():
+    """Staging, stale-location reaping and the swap are decided in
+    tables.py alone; every other module calls replace_table,
+    replace_dir or warehouse_path."""
+    import pathlib
+
+    pkg = pathlib.Path(__file__).resolve().parent.parent / "hive_hw_spark"
+    spelled = [
+        f"{path.relative_to(pkg)}: {needle}"
+        for path in sorted(pkg.rglob("*.py"))
+        if path != pkg / "tables.py"
+        for needle in ("RENAME TO", "os.rename(", 'removeprefix("file:")')
+        if needle in path.read_text()
+    ]
+    assert spelled == []
 
 
 def test_q191_parquet_compression_codecs_roundtrip_and_size(spark, tmp_path):
