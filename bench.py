@@ -329,7 +329,6 @@ def main() -> None:
     sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
     from hive_hw_spark.queries import all_queries
     from hive_hw_spark.session import get_spark
-    from hive_hw_spark.session_cache import release_session_caches
 
     spark = get_spark(app_name="hive_hw_bench")
 
@@ -407,19 +406,9 @@ def main() -> None:
     persist_built: dict[str, list[str]] = {}
     persist_reused: dict[str, list[str]] = {}
 
-    n_run = 0
     for name in HEADLINE:
         if name not in registry:
             continue
-        n_run += 1
-        if n_run % 150 == 0:
-            # Same storage-hygiene rule scripts/drive.py applies every
-            # 150 queries: a 277-query single-session sweep accumulates
-            # persisted frames + localCheckpoint blocks until GC pressure
-            # inflates unrelated tail queries (r9: q220 read 1.7 s
-            # mid-sweep vs 0.7 s in r8's shorter sweep). Each query still
-            # warms its OWN frames across its min-of-3 reps.
-            release_session_caches(spark)
         _llm_ops.PERSIST_EVENTS.clear()
         reps: list[float] = []
         for _ in range(3):

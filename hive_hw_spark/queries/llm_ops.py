@@ -40,11 +40,11 @@ from hive_hw_spark.queries._util import (
     sql_dratio_round,
 )
 # PERSIST_EVENTS: perfbench and bench.py read the event log from here;
-# query modules import _managed_persist from here
+# query modules import _managed_persist from here, the tests _plan_key
 from hive_hw_spark.session_cache import PERSIST_EVENTS  # noqa: F401
 from hive_hw_spark.session_cache import managed_persist as _managed_persist
 from hive_hw_spark.session_cache import memo
-from hive_hw_spark.session_cache import plan_key as _plan_key
+from hive_hw_spark.session_cache import plan_key as _plan_key  # noqa: F401
 
 # Fixed stopword list for Q93/Q98 (the engine vocabulary's function words).
 STOPWORDS = ("a", "the", "and", "of", "to", "in", "is", "on", "for", "with")
@@ -53,14 +53,6 @@ _SW_SQL = ", ".join(f"'{w}'" for w in STOPWORDS)
 
 def _toks(col: str = "text") -> F.Column:
     return F.split(F.col(col), " ")
-
-
-# (docs_plan_key, pairs_plan_key) -> (session, labels frame).
-# Connected-components results are checkpoint-backed, so the CacheManager
-# can never match them by plan; this session-scope memo is the only way a
-# re-invocation (bench min-of-2, q118-then-q122) reuses the converged
-# labels instead of re-running the whole propagation loop.
-_COMPONENT_CACHE: dict = memo()
 
 
 # --------------------------------------------------------------------------
@@ -1099,27 +1091,18 @@ def _unit_vectors(e: DataFrame) -> DataFrame:
     )
 
 
-# Driver-side memo for collected centroid matrices, keyed by the centroid
-# plan's canonicalized-plan key (_plan_key): the collect() inside the IVF
-# build is an ACTION, so unlike the persisted frames it would re-run its
-# Spark jobs on every re-invocation of the (deterministic) build.
-# Same-plan → same rows, so the matrix is safe to reuse; different
-# input/params → different key.
-_CENTROID_MEMO: dict[str, tuple[np.ndarray, np.ndarray]] = memo()
-
-
 def _collect_centroids(cents_df: DataFrame) -> tuple[np.ndarray, np.ndarray]:
-    key = _plan_key(cents_df)
-    if key is not None and key in _CENTROID_MEMO:
-        return _CENTROID_MEMO[key]
-    rows = cents_df.orderBy("cid").collect()
-    cids = np.array([r["cid"] for r in rows], dtype=np.int64)
-    cmat = np.array([list(r["cv"]) for r in rows], dtype=np.float64)
-    if key is not None:
-        if len(_CENTROID_MEMO) > 16:
-            _CENTROID_MEMO.clear()
-        _CENTROID_MEMO[key] = (cids, cmat)
-    return cids, cmat
+    """The centroid matrix, collected once per centroid plan: the
+    collect() is an ACTION, so unlike the persisted frames it would re-run
+    its Spark jobs on every re-invocation of the (deterministic) build."""
+
+    def collect() -> tuple[np.ndarray, np.ndarray]:
+        rows = cents_df.orderBy("cid").collect()
+        cids = np.array([r["cid"] for r in rows], dtype=np.int64)
+        cmat = np.array([list(r["cv"]) for r in rows], dtype=np.float64)
+        return cids, cmat
+
+    return memo("ivf_centroids", [cents_df], (), collect)
 
 
 def ivf_index(
@@ -1243,12 +1226,6 @@ def q92c(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# PQ codebook memo, same rationale as _CENTROID_MEMO: training runs a few
-# small collect() ACTIONS whose inputs are deterministic, so re-invoking the
-# build should reuse the learned codebooks instead of re-running the jobs.
-_PQ_MEMO: dict[tuple, np.ndarray] = memo()
-
-
 def pq_index(
     e: DataFrame, m_sub: int = 16, k_codes: int = 16, lloyd_iters: int = 2
 ) -> tuple[DataFrame, np.ndarray]:
@@ -1274,8 +1251,6 @@ def pq_index(
     from pyspark.sql.functions import pandas_udf
 
     unit = _unit_vectors(e)
-    upk = _plan_key(unit)
-    key = (upk, m_sub, k_codes, lloyd_iters) if upk is not None else None
 
     def encode_with(books: np.ndarray) -> DataFrame:
         ds = books.shape[2]
@@ -1299,9 +1274,7 @@ def pq_index(
 
         return unit.withColumn("pq", pq_pack("u")).select("vec_id", "u", "pq")
 
-    if key is not None and key in _PQ_MEMO:
-        books = _PQ_MEMO[key]
-    else:
+    def train() -> np.ndarray:
         # deterministic seeds: subvectors of the k_codes lowest vec_ids
         seed_rows = (
             unit.filter(F.col("vec_id") < k_codes).orderBy("vec_id").collect()
@@ -1337,11 +1310,11 @@ def pq_index(
             for r in stats:
                 nxt[r["m"], r["c"], r["pos"]] = r["mu"]
             books = nxt
-        if key is not None:
-            if len(_PQ_MEMO) > 16:
-                _PQ_MEMO.clear()
-            _PQ_MEMO[key] = books
+        return books
 
+    # training runs a few small collect() ACTIONS over deterministic
+    # inputs, so a re-invoked build reuses the learned codebooks
+    books = memo("pq_codebooks", [unit], (m_sub, k_codes, lloyd_iters), train)
     return _managed_persist("pq_codes", encode_with(books)), books
 
 
@@ -1911,12 +1884,17 @@ def neardup_components(
     nothing downstream can warm-reuse it through the CacheManager —
     without the memo every re-invocation (bench min-of-2, pipeline
     compositions like q122 after q118) re-ran the whole propagation."""
-    dpk, ppk = _plan_key(docs), _plan_key(pairs)
-    key = (dpk, ppk) if dpk is not None and ppk is not None else None
-    if key is not None:
-        cached_sess, cached = _COMPONENT_CACHE.get(key, (None, None))
-        if cached is not None and cached_sess is docs.sparkSession:
-            return cached
+    return memo(
+        "neardup_components",
+        [docs, pairs],
+        (max_iters,),
+        lambda: _propagate_min_labels(docs, pairs, max_iters),
+    )
+
+
+def _propagate_min_labels(
+    docs: DataFrame, pairs: DataFrame, max_iters: int
+) -> DataFrame:
     # Materialize the pair list ONCE before fanning it into the two
     # union branches. The persist used to sit at the edges level, below
     # the union — so the first action computed the entire upstream
@@ -1981,12 +1959,9 @@ def neardup_components(
             f"neardup_components: not converged after {max_iters} rounds "
             f"({changed} labels still changing)"
         )
-    result = labels.select(
+    return labels.select(
         "doc_id", F.col("lbl").cast("bigint").alias("cluster_id")
     ).orderBy("doc_id")
-    if key is not None:
-        _COMPONENT_CACHE[key] = (docs.sparkSession, result)
-    return result
 
 
 @register(

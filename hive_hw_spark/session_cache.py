@@ -1,8 +1,9 @@
-"""One session cache: persisted frames and memoized query plans.
+"""One session cache: persisted frames, memoized query plans and
+driver-side results.
 
-A long session runs many queries over several datasets. Two caches let a
-re-run of the same query skip work, and this module owns both under one
-policy:
+A long session runs many queries over several datasets. Three caches let
+a re-run of the same query skip work, and this module owns all of them
+under one policy:
 
 - **Persisted frames** (``managed_persist``). A query persists a shared
   intermediate frame under a slot name (``"bm25_scores"``). The entry is
@@ -15,6 +16,11 @@ policy:
   persisted entries its fn touched. A hit whose entries are no longer the
   live ones runs the fn again, so a memoized plan never reads a released
   frame (it would recompute the frame from its sources on every run).
+- **Driver-side results** (``memo``). A value an action collects to the
+  driver (a centroid matrix, a codebook) or a checkpoint-backed frame
+  the CacheManager cannot match by plan is kept under (name, ``plan_key``
+  of each input frame, params). A hit counts only in the session that
+  built it; an input without a plan key is never cached.
 - **Budget.** Persisted entries are evicted least-recently-used first
   while their bytes exceed the budget. The budget is the part of the
   block managers' storage pool that execution memory cannot evict
@@ -25,9 +31,9 @@ policy:
   Persisted frames should stay vocab-sized or key-sized, never
   corpus-sized: the budget bounds storage, it does not make a
   corpus-sized persist cheap.
-- **Release.** ``release_session_caches`` drops every entry, memo and
-  registered driver-side memo (``memo()``) and clears Spark's cache:
-  the periodic purge of long single-session sweeps.
+- **Release.** ``release_session_caches`` drops every entry, plan memo
+  and driver-side memo and clears Spark's cache, for a caller that
+  wants the session cold again.
 
 ``PERSIST_EVENTS`` logs one ``(entry name, built)`` pair per
 ``managed_persist`` call; the name is the slot plus a short plan digest
@@ -42,11 +48,13 @@ import hashlib
 from collections import OrderedDict
 from collections.abc import Callable
 from dataclasses import dataclass
+from typing import TypeVar
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 PERSIST_EVENTS: list[tuple[str, bool]] = []
+T = TypeVar("T")
 
 
 @dataclass(eq=False)
@@ -63,7 +71,8 @@ _FRAMES: OrderedDict[tuple[str, str | None], _Entry] = OrderedDict()
 _PLANS: dict[tuple[str, str], tuple[SparkSession, DataFrame, frozenset]] = {}
 # one set per plan_cache fn being built: the entries it has touched so far
 _BUILDING: list[set[_Entry]] = []
-_MEMOS: list[dict] = []
+# (name, input plan keys, params) -> (session, value)
+_MEMO: dict[tuple, tuple[SparkSession, object]] = {}
 
 
 def plan_key(df: DataFrame) -> str | None:
@@ -183,23 +192,38 @@ def plan_cache(fn: Callable[[SparkSession, str], DataFrame]):
     return wrapped
 
 
-def memo() -> dict:
-    """A driver-side memo dict that ``release_session_caches`` clears."""
-    d: dict = {}
-    _MEMOS.append(d)
-    return d
+def memo(
+    name: str, frames: list[DataFrame], params: tuple, build: Callable[[], T]
+) -> T:
+    """``build()``, memoized for the session under (``name``, the
+    ``plan_key`` of each of ``frames``, ``params``). Same plans and params
+    mean the same result, so a deterministic build derived from ``frames``
+    runs once per session. A hit needs the session that built the value;
+    a miss drops every other session's values, which can never hit
+    again. When any input has no plan key the build runs uncached."""
+    keys = tuple(plan_key(f) for f in frames)
+    if None in keys:
+        return build()
+    spark = frames[0].sparkSession
+    key = (name, keys, params)
+    hit = _MEMO.get(key)
+    if hit is not None and hit[0] is spark:
+        return hit[1]
+    for k in [k for k, (sess, _) in _MEMO.items() if sess is not spark]:
+        del _MEMO[k]
+    value = build()
+    _MEMO[key] = (spark, value)
+    return value
 
 
 def release_session_caches(spark: SparkSession) -> None:
     """Unpersist every managed frame, forget every plan memo and
-    registered memo, and clear Spark's cache. Queries rebuild their
-    shared frames cold on next use: correctness-neutral,
-    storage-bounded."""
+    driver-side memo, and clear Spark's cache. Queries rebuild their
+    shared frames cold on next use: correctness-neutral."""
     for entry in list(_FRAMES.values()):
         _release(entry)
     _PLANS.clear()
-    for d in _MEMOS:
-        d.clear()
+    _MEMO.clear()
     spark.catalog.clearCache()
 
 

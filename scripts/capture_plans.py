@@ -7,8 +7,8 @@ Writes OUT_DIR/<name>_<SUFFIX>.txt with the formatted physical plan of
 each query built against $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1).
 Plans are captured pre-execution (AdaptiveSparkPlan isFinalPlan=false),
 which is the form that shows Exchange placement, join strategy,
-PushedFilters and ReadSchema. The session mirrors scripts/drive.py's
-vanilla build so the plan matches what the driver would produce.
+PushedFilters and ReadSchema. The session is scripts/drive.py's
+vanilla session, so the plan matches what the sweep would produce.
 """
 
 from __future__ import annotations
@@ -18,7 +18,7 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from pyspark.sql import SparkSession  # noqa: E402
+from drive import vanilla_session  # noqa: E402
 
 
 def main() -> None:
@@ -27,17 +27,7 @@ def main() -> None:
     os.makedirs(out_dir, exist_ok=True)
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-    spark = (
-        SparkSession.builder.master(
-            "local[%s]" % os.environ.get("SPARK_GRAFT_CPUS", "8")
-        )
-        .config("spark.driver.memory", "8g")
-        .config("spark.sql.shuffle.partitions", "8")
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        .getOrCreate()
-    )
-    spark.sparkContext.setLogLevel("ERROR")
+    spark = vanilla_session()
 
     from hive_hw_spark.queries import query_fns  # noqa: E402
 

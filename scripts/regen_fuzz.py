@@ -26,9 +26,8 @@ including the events.ts physical dtype branch.
 
 Usage:
   python scripts/regen_fuzz.py --seed 1 [--src /root/testdata/sf0.01]
-  SPARK_GRAFT_VERIFY_SF_DIR=/tmp/fuzz_sf0.01_s1 python scripts/drive.py
-  SPARK_GRAFT_AUDIT_SF_DIR=/tmp/fuzz_sf0.01_s1 \
-      python scripts/raw_divergence_audit.py
+  python scripts/drive.py --sf /tmp/fuzz_sf0.01_s1
+  python scripts/drive.py --sf /tmp/fuzz_sf0.01_s1 --check raw
 """
 from __future__ import annotations
 

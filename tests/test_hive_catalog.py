@@ -6,16 +6,19 @@ in-memory-catalog session (and embedded Derby is single-process)."""
 
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 import textwrap
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_table_survives_session_restart(tmp_path):
     script = textwrap.dedent(
         f"""
         import sys
-        sys.path.insert(0, "/root/repo")
+        sys.path.insert(0, {ROOT!r})
         from hive_hw_spark.session import get_hive_spark
 
         wh, ms = {str(tmp_path / "wh")!r}, {str(tmp_path / "ms")!r}

@@ -136,7 +136,8 @@ def test_pq_index_packs_valid_deterministic_codes(spark, sf_dir):
     import numpy as np
 
     from hive_hw_spark.catalog import load_table
-    from hive_hw_spark.queries.llm_ops import _PQ_MEMO, pq_index
+    from hive_hw_spark import session_cache
+    from hive_hw_spark.queries.llm_ops import pq_index
 
     e = load_table(spark, sf_dir, "embeddings")
     enc1, books1 = pq_index(e)
@@ -151,8 +152,9 @@ def test_pq_index_packs_valid_deterministic_codes(spark, sf_dir):
             want = int(((books1[m] - sub) ** 2).sum(axis=1).argmin())
             got = (r.pq >> (4 * m)) & 15
             assert got == want, (r.vec_id, m, got, want)
-    # drop the memo so training genuinely re-runs, then compare
-    _PQ_MEMO.clear()
+    # drop the codebook memo so training genuinely re-runs, then compare
+    for k in [k for k in session_cache._MEMO if k[0] == "pq_codebooks"]:
+        del session_cache._MEMO[k]
     enc2, books2 = pq_index(e)
     assert np.array_equal(books1, books2)
     codes1 = {r.vec_id: r.pq for r in rows}
@@ -593,14 +595,12 @@ def test_q102_threshold_pairs_multiblock_equals_singleblock(spark, sf_dir):
 
 
 def test_release_session_caches_empties_every_cache():
-    """scripts/drive.py's every-150-queries purge (and bench.py's, and
-    the raw-divergence audit's) calls this one helper; it must unpersist
-    every managed frame, forget every plan memo, clear every registered
-    driver-side memo and Spark's cache, whatever the entries hold."""
+    """Releasing the session caches must unpersist every managed frame,
+    forget every plan memo and driver-side memo, and clear Spark's
+    cache, whatever the entries hold."""
     from types import SimpleNamespace
 
     from hive_hw_spark import session_cache as sc
-    from hive_hw_spark.queries import llm_ops
 
     class FakeFrame:
         def __init__(self):
@@ -613,8 +613,7 @@ def test_release_session_caches_empties_every_cache():
     fake_spark = SimpleNamespace(
         catalog=SimpleNamespace(clearCache=lambda: cleared.append(True))
     )
-    memos = (llm_ops._COMPONENT_CACHE, llm_ops._CENTROID_MEMO, llm_ops._PQ_MEMO)
-    saved = [dict(sc._FRAMES), dict(sc._PLANS)] + [dict(m) for m in memos]
+    saved = [dict(sc._FRAMES), dict(sc._PLANS), dict(sc._MEMO)]
     f1, f2 = FakeFrame(), FakeFrame()
     try:
         sc._FRAMES.clear()
@@ -622,20 +621,84 @@ def test_release_session_caches_empties_every_cache():
         sc._FRAMES[("a", "pk1")] = sc._Entry(("a", "pk1"), "a@pk1", f1)
         sc._FRAMES[("b", None)] = sc._Entry(("b", None), "b@none", f2)
         sc._PLANS[("q1", "d")] = ("sess", "frame", frozenset())
-        for m in memos:
-            m["k"] = "v"
+        sc._MEMO[("m", ("pk1",), ())] = ("sess", "v")
         sc.release_session_caches(fake_spark)
-        assert sc._FRAMES == {} and sc._PLANS == {}
-        assert all(m == {} for m in memos)
+        assert sc._FRAMES == {} and sc._PLANS == {} and sc._MEMO == {}
         assert f1.released and f2.released and cleared == [True]
     finally:
         sc._FRAMES.clear()
         sc._FRAMES.update(saved[0])
         sc._PLANS.clear()
         sc._PLANS.update(saved[1])
-        for m, old in zip(memos, saved[2:]):
-            m.clear()
-            m.update(old)
+        sc._MEMO.clear()
+        sc._MEMO.update(saved[2])
+
+
+@pytest.fixture
+def empty_memo(monkeypatch):
+    """The session cache with an empty driver-side memo of its own, so a
+    test neither reads nor disturbs the suite's memoized results."""
+    from hive_hw_spark import session_cache
+
+    monkeypatch.setattr(session_cache, "_MEMO", {})
+    return session_cache
+
+
+def _counting_build(log):
+    def build():
+        log.append(1)
+        return len(log)
+
+    return build
+
+
+def test_memo_builds_once_per_frames_and_params(spark, empty_memo):
+    builds = []
+    build = _counting_build(builds)
+    first = empty_memo.memo("t", [spark.range(5)], (1,), build)
+    assert empty_memo.memo("t", [spark.range(5)], (1,), build) == first
+    assert len(builds) == 1
+    empty_memo.memo("t", [spark.range(5)], (2,), build)
+    empty_memo.memo("t", [spark.range(6)], (1,), build)
+    assert len(builds) == 3
+
+
+def test_memo_builds_again_in_a_new_session(spark, empty_memo):
+    builds = []
+    build = _counting_build(builds)
+    empty_memo.memo("t", [spark.range(5)], (), build)
+    other = spark.newSession()
+    empty_memo.memo("t", [other.range(5)], (), build)
+    assert len(builds) == 2
+    # the first session's value can never hit again, so it was dropped
+    assert [v[0] for v in empty_memo._MEMO.values()] == [other]
+
+
+def test_release_session_caches_empties_the_memo(
+    spark, empty_memo, monkeypatch
+):
+    from collections import OrderedDict
+    from types import SimpleNamespace
+
+    monkeypatch.setattr(empty_memo, "_FRAMES", OrderedDict())
+    monkeypatch.setattr(empty_memo, "_PLANS", {})
+    fake_spark = SimpleNamespace(catalog=SimpleNamespace(clearCache=lambda: None))
+    builds = []
+    empty_memo.memo("t", [spark.range(5)], (), _counting_build(builds))
+    empty_memo.release_session_caches(fake_spark)
+    assert empty_memo._MEMO == {}
+    empty_memo.memo("t", [spark.range(5)], (), _counting_build(builds))
+    assert len(builds) == 2
+
+
+def test_memo_never_caches_a_frame_without_plan_key(
+    spark, empty_memo, monkeypatch
+):
+    monkeypatch.setattr(empty_memo, "plan_key", lambda df: None)
+    builds = []
+    for _ in range(2):
+        empty_memo.memo("t", [spark.range(5)], (), _counting_build(builds))
+    assert len(builds) == 2 and empty_memo._MEMO == {}
 
 
 def _copy_documents(sf_dir, dst) -> str:

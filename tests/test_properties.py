@@ -189,9 +189,12 @@ def test_merge_upsert_matches_dict_model(spark, target, source):
         "k long, v double",
     ).filter(F.col("k").isNotNull())
 
-    got = {
-        r.k: r.v for r in merge_upsert(spark, name, src, ["k"]).collect()
-    }
+    try:
+        got = {
+            r.k: r.v for r in merge_upsert(spark, name, src, ["k"]).collect()
+        }
+    finally:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
     model = dict(target)
     model.update(dict(source))
     assert got == {k: float(v) for k, v in model.items()}

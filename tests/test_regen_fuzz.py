@@ -18,10 +18,11 @@ REAL latent defects in driver-attested queries, all fixed in r11:
 This test rebuilds small fuzz datasets (sf0.001 base, three seeds) at
 run time and holds those queries — plus the guarded divide-by-zero
 family — green on data they have never seen. Full-registry fuzz sweeps
-stay a scripts/ gate (SPARK_GRAFT_VERIFY_SF_DIR=... scripts/drive.py).
+stay a scripts/ gate (scripts/drive.py --sf DIR).
 """
 from __future__ import annotations
 
+import os
 import subprocess
 import sys
 
@@ -35,6 +36,7 @@ QUERIES = (
     "q394", "q259", "q307", "q393",
 )
 SEEDS = (1, 2, 3)
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 @pytest.fixture(scope="module")
@@ -59,7 +61,7 @@ def fuzz_dirs(tmp_path_factory):
                 "-1",
             ],
             check=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         dirs[seed] = out
     return dirs
@@ -90,7 +92,7 @@ def test_regen_fuzz_seed_reproducible(tmp_path):
                 "--out", out,
             ],
             check=True,
-            cwd="/root/repo",
+            cwd=ROOT,
         )
         outs.append(out)
     import pyarrow.parquet as pq

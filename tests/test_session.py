@@ -88,3 +88,44 @@ def test_suite_session_heap_fits_in_physical_memory(spark):
     conf = spark.sparkContext.getConf().get("spark.driver.memory", "1g")
     heap = spark.sparkContext._jvm.org.apache.spark.network.util.JavaUtils.byteStringAsBytes(conf)
     assert heap <= session._physical_memory_bytes(), conf
+
+
+def test_one_session_builder_no_purge_no_stray_dict_cache():
+    """scripts/drive.py holds the one vanilla-session builder; no script
+    or bench.py purges the session caches mid-run; and session_cache.py
+    holds every module-level dict cache in the package (the query
+    registry is not a cache)."""
+    import ast
+    import pathlib
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    runners = sorted(root.glob("scripts/*.py")) + [root / "bench.py"]
+    found = [
+        f"{p.relative_to(root)}: SparkSession.builder"
+        for p in runners
+        if p != root / "scripts" / "drive.py"
+        and "SparkSession.builder" in p.read_text()
+    ] + [
+        f"{p.relative_to(root)}: release_session_caches"
+        for p in runners
+        if "release_session_caches(" in p.read_text()
+    ]
+    pkg = root / "hive_hw_spark"
+    for p in sorted(pkg.rglob("*.py")):
+        if p == pkg / "session_cache.py":
+            continue
+        for node in ast.parse(p.read_text()).body:
+            if isinstance(node, ast.Assign):
+                targets, value = node.targets, node.value
+            elif isinstance(node, ast.AnnAssign) and node.value is not None:
+                targets, value = [node.target], node.value
+            else:
+                continue
+            empty_dict = isinstance(value, ast.Dict) and not value.keys
+            dict_call = isinstance(value, ast.Call) and ast.unparse(
+                value.func
+            ).split(".")[-1] in ("dict", "OrderedDict", "defaultdict", "memo")
+            names = [ast.unparse(t) for t in targets]
+            if (empty_dict or dict_call) and names != ["_REGISTRY"]:
+                found.append(f"{p.relative_to(root)}: {', '.join(names)}")
+    assert found == []

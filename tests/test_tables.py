@@ -12,15 +12,24 @@ from pyspark.sql import functions as F
 from hive_hw_spark.tables import merge_upsert
 
 
-def _fresh_table(spark, rows, schema):
-    name = f"t_{uuid.uuid4().hex[:12]}"
-    spark.createDataFrame(rows, schema).write.saveAsTable(name)
-    return name
+@pytest.fixture
+def fresh_table(spark):
+    """Save rows as a uniquely named table; drop it after the test."""
+    names = []
+
+    def make(rows, schema):
+        name = f"t_{uuid.uuid4().hex[:12]}"
+        names.append(name)
+        spark.createDataFrame(rows, schema).write.saveAsTable(name)
+        return name
+
+    yield make
+    for name in names:
+        spark.sql(f"DROP TABLE IF EXISTS {name}")
 
 
-def test_merge_update_insert_delete_keep(spark):
-    name = _fresh_table(
-        spark,
+def test_merge_update_insert_delete_keep(spark, fresh_table):
+    name = fresh_table(
         [(1, "a", 10.0), (2, "b", 20.0), (3, "c", 30.0)],
         "k long, name string, v double",
     )
@@ -42,8 +51,8 @@ def test_merge_update_insert_delete_keep(spark):
     assert again == got
 
 
-def test_merge_is_idempotent_for_pure_upserts(spark):
-    name = _fresh_table(spark, [(1, 1.0), (2, 2.0)], "k long, v double")
+def test_merge_is_idempotent_for_pure_upserts(spark, fresh_table):
+    name = fresh_table([(1, 1.0), (2, 2.0)], "k long, v double")
     source = spark.createDataFrame([(2, 5.0), (9, 9.0)], "k long, v double")
     first = sorted(
         (r.k, r.v) for r in merge_upsert(spark, name, source, ["k"]).collect()
@@ -54,8 +63,8 @@ def test_merge_is_idempotent_for_pure_upserts(spark):
     assert first == second == [(1, 1.0), (2, 5.0), (9, 9.0)]
 
 
-def test_merge_rejects_schema_mismatch(spark):
-    name = _fresh_table(spark, [(1, 1.0)], "k long, v double")
+def test_merge_rejects_schema_mismatch(spark, fresh_table):
+    name = fresh_table([(1, 1.0)], "k long, v double")
     bad = spark.createDataFrame([(1, "x")], "k long, other string")
     with pytest.raises(ValueError, match="schema"):
         merge_upsert(spark, name, bad, ["k"])
